@@ -61,14 +61,16 @@ def country_detail_tail(kpi_monthly: DataFrame, k: int = 24) -> DataFrame:
     return tail_k(kpi_monthly, ["year", "month_num"], k)
 
 
-def top_categories(kpi_prod: DataFrame, n_top: int = 5) -> list[str]:
+def top_categories(kpi_prod: DataFrame,
+                   n_top: int | None = 5) -> list[str]:
     """Category pre-selection: top-N by total exports
     (``app.py:447-459``) — the one driver round-trip (a k-row collect
-    feeding the UI multiselect)."""
+    feeding the UI multiselect). ``n_top=None`` returns the whole
+    ranking, whose n-prefix is the top-n for every n."""
     exp_col = resolve_alias(kpi_prod, "exp", "export")
-    ranked = top_n(
-        kpi_prod.groupBy("category").agg(F.sum(exp_col).alias("_t")),
-        "_t", n_top, "category")
+    totals = kpi_prod.groupBy("category").agg(F.sum(exp_col).alias("_t"))
+    ranked = (totals.orderBy(F.desc("_t"), F.asc("category"))
+              if n_top is None else top_n(totals, "_t", n_top, "category"))
     return [r.category for r in ranked.collect()]
 
 

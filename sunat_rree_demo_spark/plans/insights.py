@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from sunat_rree_demo_spark.functions.months import MONTH_NAMES_ES
 from sunat_rree_demo_spark.operators.relational import resolve_alias
@@ -66,22 +66,38 @@ def _action(yoy: float) -> tuple[str, str]:
 
 def top_insight_records(kpi_prod: DataFrame, top_n: int = 3) -> list[dict[str, Any]]:
     """The distributed reduction: latest year → dropna → top-n by |YoY|
-    (``insights_engine.py:44-78``)."""
-    if not kpi_prod.columns or kpi_prod.isEmpty():
+    (``insights_engine.py:44-78``) as ONE ordered limit. Rows sort by
+    year descending, then complete rows (no null/NaN in the reference's
+    dropna subset) before incomplete ones, then |YoY| descending and
+    category, so the first ``top_n`` rows hold every record the answer
+    needs; the driver keeps the complete rows of the first row's year."""
+    if not kpi_prod.columns:
         return []
     yoy_col = resolve_alias(kpi_prod, "exp_yoy", "%YoY_exp")
-    latest = kpi_prod.agg(F.max("year")).first()[0]
-    sub = (
-        kpi_prod.filter(F.col("year") == latest)
-        .na.drop(subset=[c for c in (yoy_col, "balance") if c in kpi_prod.columns])
-        .orderBy(F.desc(F.abs(F.col(yoy_col))), F.asc("category"))
-        .limit(top_n)
-    )
-    # normalize the resolved YoY column to 'exp_yoy' so downstream
-    # templating works for either supported schema
-    if yoy_col != "exp_yoy":
-        sub = sub.withColumn("exp_yoy", F.col(yoy_col))
-    return [r.asDict() for r in sub.collect()]
+    complete = F.lit(True)
+    for c, t in kpi_prod.dtypes:
+        if c in (yoy_col, "balance"):
+            missing = F.col(c).isNull()
+            if t in ("double", "float"):  # na.drop treats NaN as missing
+                missing = missing | F.isnan(c)
+            complete = complete & ~missing
+    rows = (
+        kpi_prod.withColumn("_complete", complete)
+        .orderBy(F.desc("year"), F.desc("_complete"),
+                 F.desc(F.abs(F.col(yoy_col))), F.asc("category"))
+        .limit(top_n).collect())
+    latest = rows[0].year if rows else None
+    out = []
+    for r in rows:
+        if latest is None or r.year != latest or not r["_complete"]:
+            break  # the sort puts every kept row before the first dropped one
+        rec = r.asDict()
+        del rec["_complete"]
+        # normalize the resolved YoY column to 'exp_yoy' so downstream
+        # templating works for either supported schema
+        rec.setdefault("exp_yoy", rec[yoy_col])
+        out.append(rec)
+    return out
 
 
 def build_insights(kpi_prod: DataFrame, top_n: int = 3) -> list[str]:
@@ -141,24 +157,39 @@ def build_summary_insights(kpi_monthly: DataFrame,
 
 def quick_stats(kpi_prod: DataFrame) -> dict[str, Any]:
     """Latest year, active categories, best month, YoY volatility
-    (``insights_engine.py:194-234``) — one small aggregate bundle."""
-    if kpi_prod.isEmpty():
-        return {"error": "Sin datos"}
+    (``insights_engine.py:194-234``) as one aggregate, observed over a
+    single scan of the frame (a no-op write), so the bundle costs one
+    Spark job; ``agg().first()`` would cost two under AQE, which runs
+    the shuffle feeding a global aggregate as a job of its own."""
     exp_col = resolve_alias(kpi_prod, "exp", "export")
-    latest = kpi_prod.agg(F.max("year")).first()[0]
-    best = (
-        kpi_prod.filter((F.col("year") == latest) & F.col(exp_col).isNotNull()
-                        & (F.col(exp_col) > 0))
-        .orderBy(F.desc(exp_col), F.asc("month")).limit(1).collect())
-    vol = 0.0
+    exp = F.col(exp_col)
+    # the smallest key is the best month of the latest year: the latest
+    # year first, then rows with a positive export (if there are none,
+    # no best month), the largest export, the earliest month name
+    key = F.when(F.col("year").isNotNull(), F.struct(
+        (-F.col("year")).alias("neg_year"),
+        (~F.coalesce(exp > 0, F.lit(False))).alias("no_export"),
+        (-exp).alias("neg_exp"),
+        F.col("month").alias("month")))
+    aggs = [F.count(F.lit(1)).alias("rows"), F.min(key).alias("best")]
+    cols = ["year", "month", exp_col]
     if "exp_yoy" in kpi_prod.columns:
-        v = kpi_prod.agg(F.stddev_samp("exp_yoy")).first()[0]
-        vol = v or 0.0
-    n_cat = (kpi_prod.select(F.countDistinct("category")).first()[0]
-             if "category" in kpi_prod.columns else 0)
+        aggs.append(F.stddev_samp("exp_yoy").alias("volatility"))
+        cols.append("exp_yoy")
+    if "category" in kpi_prod.columns:
+        aggs.append(F.size(F.collect_set("category")).alias("categories"))
+        cols.append("category")
+    obs = Observation()
+    (kpi_prod.select(*cols).observe(obs, *aggs)
+     .write.format("noop").mode("overwrite").save())
+    got = obs.get
+    if not got["rows"]:
+        return {"error": "Sin datos"}
+    best = got["best"]
     return {
-        "latest_year": latest,
-        "active_categories": n_cat,
-        "best_month": best[0].month if best else "N/A",
-        "volatility": vol,
+        "latest_year": None if best is None else -best.neg_year,
+        "active_categories": got.get("categories", 0),
+        "best_month": ("N/A" if best is None or best.no_export
+                       else best.month),
+        "volatility": got.get("volatility") or 0.0,
     }

@@ -63,6 +63,22 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """The driver heap ``get_spark`` asks for unless ``SPARK_DRIVER_MEM``
+    says otherwise: the smaller of 16g and half of the host's
+    ``MemTotal``, so a local[N] JVM never claims more than half the
+    machine (16g when the host's memory cannot be read)."""
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    half_mb = int(line.split()[1]) // 2048  # kB → MB, / 2
+                    return f"{min(16 * 1024, half_mb)}m"
+    except OSError:
+        pass
+    return "16g"
+
+
 def get_spark(app_name: str = "sunat_rree_demo_spark",
               cpus: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
@@ -81,7 +97,8 @@ def get_spark(app_name: str = "sunat_rree_demo_spark",
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
     )

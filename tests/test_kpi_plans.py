@@ -168,6 +168,7 @@ def test_insights_edge_cases(spark):
         build_insights,
         format_currency,
         month_abbrev,
+        quick_stats,
         trend_emoji,
     )
 
@@ -180,6 +181,32 @@ def test_insights_edge_cases(spark):
     ]))
     out = build_insights(empty)
     assert len(out) == 1 and "Sin datos" in out[0]
+    assert quick_stats(empty.withColumn("exp", F.lit(1.0))) == {
+        "error": "Sin datos"}
+
+    schema = "year long, month string, category string, exp double, " \
+             "exp_yoy double"
+
+    def stats(rows):
+        return quick_stats(spark.createDataFrame(rows, schema))
+
+    # the latest year has rows but no positive export: no best month,
+    # not the earlier year's
+    got = stats([(2024, "Enero", "A", 0.0, 1.0),
+                 (2024, "Febrero", "B", None, 3.0),
+                 (2023, "Marzo", "A", 500.0, 2.0)])
+    assert got["latest_year"] == 2024 and got["best_month"] == "N/A"
+    assert got["active_categories"] == 2
+    assert abs(got["volatility"] - 1.0) < 1e-12  # stddev_samp(1, 3, 2)
+    # tied exports: ascending month name breaks the tie
+    got = stats([(2024, "Marzo", "A", 50.0, None),
+                 (2024, "Abril", "B", 50.0, None),
+                 (2024, "Enero", "C", 20.0, None),
+                 (2023, "Agosto", "A", 90.0, None)])
+    assert got["best_month"] == "Abril"
+    # every exp_yoy null: volatility 0.0
+    assert got["volatility"] == 0.0
+    assert got["active_categories"] == 3
 
     assert format_currency(1e9) == "1.0B"
     assert format_currency(5.2e6) == "5.2M"
@@ -197,10 +224,27 @@ def test_insights_rank_by_abs_yoy(spark):
         Row(year=2024, month="Marzo", category="A", exp_yoy=5.0, balance=1.0),
         Row(year=2024, month="Marzo", category="B", exp_yoy=-40.0, balance=-2.0),
         Row(year=2024, month="Marzo", category="C", exp_yoy=12.0, balance=3.0),
+        Row(year=2024, month="Marzo", category="E", exp_yoy=80.0, balance=None),
         Row(year=2023, month="Marzo", category="D", exp_yoy=99.0, balance=4.0),
     ])
     recs = top_insight_records(df, top_n=2)
-    assert [r["category"] for r in recs] == ["B", "C"]  # latest year, |YoY| desc
+    # latest year, dropna, |YoY| desc
+    assert [r["category"] for r in recs] == ["B", "C"]
+    # fewer complete latest-year rows than top_n: never an earlier year
+    recs = top_insight_records(df, top_n=5)
+    assert [r["category"] for r in recs] == ["B", "C", "A"]
+
+    # every latest-year row lacks a YoY or a balance (the reference's
+    # dropna): no records at all, not the earlier year's
+    schema = "year long, month string, category string, exp_yoy double, " \
+             "balance double"
+    gaps = spark.createDataFrame([
+        (2024, "Marzo", "A", None, 1.0),
+        (2024, "Marzo", "B", -40.0, None),
+        (2024, "Abril", "C", float("nan"), 3.0),
+        (2023, "Marzo", "D", 99.0, 4.0),
+    ], schema)
+    assert top_insight_records(gaps, top_n=3) == []
 
 
 def test_observe_qa_rides_the_action(spark):

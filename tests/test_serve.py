@@ -1,14 +1,20 @@
 """The dashboard serving process (plans/serve.py): rerun-loop
-semantics (every GET re-executes the parameterized query with the
-URL's widget state), widget validation, and a real socket round trip.
+semantics (every GET re-executes the widget-dependent queries with the
+URL's widget state; widget-independent results come from the app's
+construction), widget validation, and a real socket round trip.
 """
 
 from __future__ import annotations
 
+import html
+import itertools
 import json
 import re
+import sys
 import threading
 import urllib.request
+from concurrent.futures import ThreadPoolExecutor
+from urllib.parse import quote
 
 import pytest
 
@@ -118,6 +124,74 @@ def test_insights_tab_sections_and_validation(app):
     # an empty filter window is the reference's no-data warning
     status, empty = app.render("/insights?lo=1901&hi=1901")
     assert status == 200 and "no data" in empty
+
+
+def test_cats_widget_takes_comma_names_and_repeated_values(app):
+    """A category name holding a comma selects itself; repeated
+    ``cats`` values add up to one selection."""
+    name = "Maderas y Papeles, y sus Manufacturas"
+    status, body = app.render(f"/category?lo=2010&hi=2012&cats={quote(name)}")
+    assert status == 200
+    assert html.escape(name) in body and "1 categories" in body
+    status, body = app.render("/insights?cats=Químico&cats=Mineros")
+    assert status == 200
+    sect = body.split("category insights")[1].split("quick stats")[0]
+    assert "Químico" in sect and "Mineros" in sect
+    # a value that is no category name is still a comma-separated list
+    status, body = app.render(
+        f"/category?lo=2010&hi=2012&cats={quote('Químico,Mineros')}")
+    assert status == 200 and "2 categories" in body
+
+
+_groups = itertools.count()
+
+
+def _render_counting_jobs(app, url: str) -> tuple[int, str, int]:
+    """(status, html, Spark jobs) of one page, run under a job group of
+    its own on this thread."""
+    sc = app.spark.sparkContext
+    group = f"test-serve-jobs-{next(_groups)}"
+    sc.setJobGroup(group, url)
+    try:
+        status, body = app.render(url)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return status, body, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_widget_independent_results_run_no_spark_job(app):
+    """The app's KPI frames are fixed for its lifetime, so what reads
+    no widget (figures, YTD and 12-month tables, executive summary,
+    ranking) was collected at construction: the index and figure pages
+    run no Spark job, and the insights tab runs only its widget-scoped
+    queries."""
+    for url in ("/", "/chart/series_temporal", "/chart/dashboard_eda"):
+        status, _, jobs = _render_counting_jobs(app, url)
+        assert (status, jobs) == (200, 0), url
+    status, body, jobs = _render_counting_jobs(app, "/insights")
+    assert status == 200 and "Resumen Ejecutivo" in body
+    assert jobs <= 4
+    url = "/country?lo=2010&hi=2013"
+    first, second = app.render(url), app.render(url)
+    assert first[0] == 200 and first == second
+
+
+def test_concurrent_pages_equal_their_serial_renders(app):
+    """Handler threads share the app's snapshot and run their
+    widget-scoped queries at once; every page must equal its serial
+    render."""
+    urls = [f"/insights?lo={y}&hi={y + 1}&top_n=3" for y in range(2006, 2012)]
+    urls += ["/country?lo=2010&hi=2011", "/category?lo=2010&hi=2012&n=4",
+             "/chart/tendencias", "/"]
+    serial = [app.render(u) for u in urls]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(8) as ex:
+            got = list(ex.map(app.render, urls * 2, timeout=600))
+    finally:
+        sys.setswitchinterval(old)
+    assert got == serial * 2
 
 
 def test_http_round_trip_on_a_real_socket(app):
